@@ -55,7 +55,14 @@ from estuary_spark.config import (
     SyncConfig,
 )
 from estuary_spark.operators.lww import lww_reduce
-from estuary_spark.tables import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, bucket_expr
+from estuary_spark.tables import (
+    BUCKET_COL,
+    DELETED_COL,
+    LSN_COL,
+    CommitConflictError,
+    LakeTable,
+    bucket_expr,
+)
 
 
 def order_for_strategy(changes: DataFrame, cfg: SyncConfig) -> DataFrame:
@@ -89,8 +96,9 @@ def _apply_mor(
     winners: DataFrame,
     cfg: SyncConfig,
     batch_id: int,
-    offset_range: tuple[int, int],
+    offset_range: tuple[int, int] | None,
     tschema: T.StructType,
+    added: T.StructType | None,
     user_cols: list[str],
     t0: float,
     phases: dict,
@@ -109,7 +117,9 @@ def _apply_mor(
     counts every batch touches every bucket and the extra touched-distinct
     driver job per batch is pure serial overhead that caps N->4N scaling).
     Two driver actions per batch (three when pruning): the lineage
-    aggregate (which materializes the winners cache) and the delta write.
+    aggregate (which materializes the winners cache and also yields the
+    batch's observed LSN span, so an unplanned batch pays no separate
+    [min, max] job) and the delta write, one task per core.
     Rejected rows: a strictly-lower-LSN loser is committed but loses every
     read-time fold deterministically (compaction sweeps it); an EQUAL-LSN
     loser (nondeterministic fold tie with the base row) is filtered out
@@ -152,6 +162,7 @@ def _apply_mor(
         F.col("lsn").alias("_s_lsn"),
         (F.col("op") == "delete").alias("_s_del"),
         F.col("_n_events").alias("_s_n"),
+        F.col("_min_lsn").alias("_s_lo"),
         F.col(BUCKET_COL).alias("_s_bucket"),
     )
     per_key = (
@@ -162,6 +173,7 @@ def _apply_mor(
             F.max("_s_lsn").alias("_s_lsn"),
             F.max(F.col("_s_del").cast("int")).alias("_s_del"),
             F.max("_s_n").alias("_s_n"),
+            F.min("_s_lo").alias("_s_lo"),
             F.max("_s_bucket").alias("_s_bucket"),
         )
     )
@@ -186,52 +198,32 @@ def _apply_mor(
             F.sum(F.when(n_src_wins, 1).otherwise(0)).alias("wins"),
             F.count(F.lit(1)).alias("nk"),
             F.sum(F.when(F.col("_s_lsn") == t_lsn, 1).otherwise(0)).alias("ties"),
+            F.min("_s_lo").alias("lo"),
+            F.max("_s_lsn").alias("hi"),
         )
         .collect()
     )
     n_wins = sum(int(r["wins"] or 0) for r in agg_rows)
     n_keys = sum(int(r["nk"] or 0) for r in agg_rows)
     n_ties = sum(int(r["ties"] or 0) for r in agg_rows)
-    lineage_rows = [
-        {
-            "batch_id": batch_id,
-            "partition_id": int(r["b"]),
-            "offset_start": offset_range[0],
-            "offset_end": offset_range[1],
-            "rows_upserted": int(r["ups"] or 0),
-            "rows_deleted": int(r["dels"] or 0),
-            "late_events": int(r["late"] or 0),
-            "out_of_order_events": int(r["ooo"] or 0),
-        }
-        for r in agg_rows
-    ]
     _pt = _tick("mor-lineage", _pt, phases)
 
     if n_keys == 0:
         # empty batch (nothing survived the event-type filter)
         winners.unpersist()
         return BatchResult(batch_id, True, None, offset_range, [], int((time.time() - t0) * 1000))
+    rng = offset_range or (min(int(r["lo"]) for r in agg_rows), max(int(r["hi"]) for r in agg_rows))
+    lineage_rows = _lineage_rows(agg_rows, batch_id, rng)
+    if added is not None:
+        table.evolve_schema(added)
 
     if n_wins == 0:
-        # every source row lost the LSN guard — commit no data. (A delete
-        # for an absent key counts as a win: its tombstone delta must be
-        # written so a later lower-LSN event cannot resurrect it.) Two
-        # sub-cases (M1 observability, SURVEY.md):
-        #   * true replay (the range is already recorded applied): return
-        #     empty lineage — re-emitting late counts per replay would
-        #     double-count observability;
-        #   * genuinely all-late batch: KEEP the lineage rows (late/ooo
-        #     counts are exactly what M1 exists to surface) and record the
-        #     applied range with a metadata-only commit so range
-        #     bookkeeping stays complete.
+        # every source row lost the LSN guard — commit no data (see
+        # _commit_no_wins). A delete for an absent key counts as a win:
+        # its tombstone delta must be written so a later lower-LSN event
+        # cannot resurrect it.
         winners.unpersist()
-        wall = int((time.time() - t0) * 1000)
-        if table.is_range_applied(*offset_range):
-            return BatchResult(batch_id, True, None, offset_range, [], wall)
-        version = table.commit_metadata(applied_range=offset_range, batch_id=batch_id)
-        for r in lineage_rows:
-            r["wall_ms"] = wall
-        return BatchResult(batch_id, True, version, offset_range, lineage_rows, wall)
+        return _commit_no_wins(table, batch_id, offset_range, rng, lineage_rows, t0)
 
     # Rejected-row hygiene. A key that lost the LSN guard splits two ways:
     #   * _s_lsn < t_lsn (the normal late tail): its delta row loses every
@@ -265,24 +257,12 @@ def _apply_mor(
         applied_range=offset_range,
         batch_id=batch_id,
         new_schema=tschema,
-        extra_properties={
-            "last_batch": {
-                "batch_id": batch_id,
-                "offset_range": list(offset_range),
-                "upserted": sum(r["rows_upserted"] for r in lineage_rows),
-                "deleted": sum(r["rows_deleted"] for r in lineage_rows),
-                # M3: phase costs up to (not including) this commit
-                "phases_ms": dict(phases),
-            }
-        },
+        extra_properties=_last_batch(batch_id, rng, lineage_rows, phases),
+        lsn_range=rng,
     )
     _pt = _tick("mor-commit", _pt, phases)
     winners.unpersist()
-
-    wall = int((time.time() - t0) * 1000)
-    for r in lineage_rows:
-        r["wall_ms"] = wall
-    return BatchResult(batch_id, False, version, offset_range, lineage_rows, wall, phases)
+    return _committed(batch_id, version, rng, lineage_rows, t0, phases)
 
 
 class SchemaTypeChangeError(ValueError):
@@ -315,13 +295,80 @@ class BatchResult:
     phases_ms: dict = dataclasses.field(default_factory=dict)
 
 
-def reconcile_schema(table: LakeTable, batch_df: DataFrame, cfg: SyncConfig) -> T.StructType:
+def _lineage_rows(agg_rows: list, batch_id: int, rng: tuple[int, int]) -> list[dict]:
+    """Per-bucket lineage rows (M1) from a lineage aggregate's rows."""
+    return [
+        {
+            "batch_id": batch_id,
+            "partition_id": int(r["b"]),
+            "offset_start": rng[0],
+            "offset_end": rng[1],
+            "rows_upserted": int(r["ups"] or 0),
+            "rows_deleted": int(r["dels"] or 0),
+            "late_events": int(r["late"] or 0),
+            "out_of_order_events": int(r["ooo"] or 0),
+        }
+        for r in agg_rows
+    ]
+
+
+def _last_batch(batch_id: int, rng: tuple[int, int], lineage_rows: list, phases: dict) -> dict:
+    """The ``last_batch`` snapshot property a data commit records."""
+    return {
+        "last_batch": {
+            "batch_id": batch_id,
+            "offset_range": list(rng),
+            "upserted": sum(r["rows_upserted"] for r in lineage_rows),
+            "deleted": sum(r["rows_deleted"] for r in lineage_rows),
+            # M3: phase costs up to (not including) this commit
+            "phases_ms": dict(phases),
+        }
+    }
+
+
+def _committed(batch_id, version, rng, lineage_rows, t0, phases) -> BatchResult:
+    wall = int((time.time() - t0) * 1000)
+    for r in lineage_rows:
+        r["wall_ms"] = wall
+    return BatchResult(batch_id, False, version, rng, lineage_rows, wall, phases)
+
+
+def _commit_no_wins(table, batch_id, offset_range, rng, lineage_rows, t0) -> BatchResult:
+    """A batch in which every source row lost the LSN guard commits no
+    data. Three sub-cases (M1 observability, SURVEY.md):
+
+    * true replay of a planned range (already recorded applied): return
+      empty lineage — re-emitting late counts per replay would
+      double-count observability;
+    * a genuinely all-late planned batch: KEEP the lineage rows (late/ooo
+      counts are exactly what M1 exists to surface) and record the range
+      with a metadata-only commit so range bookkeeping stays complete;
+    * an unplanned batch (observed span only): commit nothing, since there
+      is no range to record, and return empty lineage — a replay and an
+      all-late batch look the same here, and a replayed file must not
+      count its events twice."""
+    wall = int((time.time() - t0) * 1000)
+    if offset_range is None or table.is_range_applied(*offset_range):
+        return BatchResult(batch_id, True, None, rng, [], wall)
+    version = table.commit_metadata(applied_range=offset_range, batch_id=batch_id)
+    for r in lineage_rows:
+        r["wall_ms"] = wall
+    return BatchResult(batch_id, True, version, rng, lineage_rows, wall)
+
+
+def reconcile_schema(
+    table: LakeTable, batch_df: DataFrame, cfg: SyncConfig
+) -> tuple[T.StructType, T.StructType | None]:
     """Additive schema evolution at batch start (the DDL-barrier point).
 
-    New value columns present in the batch but absent from the table are
-    ALTERed in (metadata-only commit). Mirrors estuary's drain-then-DDL
-    barrier (SimpleMysqlBinlogInOrderDirectFetcher.scala:28-36) — a
-    micro-batch boundary is already a drained pipeline.
+    Returns ``(schema, added)``: the table schema the batch applies
+    against, and the new value columns present in the batch but absent
+    from the table (``None`` if there are none). The caller ALTERs
+    ``added`` in with ``table.evolve_schema`` (metadata-only commit) once
+    the batch is known to carry rows, so an empty batch publishes nothing.
+    Mirrors estuary's drain-then-DDL barrier
+    (SimpleMysqlBinlogInOrderDirectFetcher.scala:28-36) — a micro-batch
+    boundary is already a drained pipeline.
     """
     tschema = table.schema
     batch_value_fields = [
@@ -341,13 +388,15 @@ def reconcile_schema(table: LakeTable, batch_df: DataFrame, cfg: SyncConfig) -> 
     if changed and cfg.on_type_change == "fail":
         raise SchemaTypeChangeError(changed)
     new_fields = [f for f in batch_value_fields if f.name not in tschema.names]
-    if new_fields:
-        if not cfg.allow_schema_evolution:
-            raise ValueError(f"schema evolution disabled; new columns {[f.name for f in new_fields]}")
-        add = T.StructType(new_fields)
-        table.evolve_schema(add)
-        tschema = table.schema
-    return tschema
+    if not new_fields:
+        return tschema, None
+    if not cfg.allow_schema_evolution:
+        raise ValueError(f"schema evolution disabled; new columns {[f.name for f in new_fields]}")
+    # the schema evolve_schema will publish: new fields appended, nullable
+    planned = T.StructType(list(tschema.fields))
+    for f in new_fields:
+        planned = planned.add(f.name, f.dataType, True)
+    return planned, T.StructType(new_fields)
 
 
 def apply_batch(
@@ -372,30 +421,33 @@ def apply_batch(
     every batch where no source row beats the target (``wins == 0``) is
     detected after the LSN-guard join and commits nothing, so a replay
     still produces zero new snapshots.
+
+    ``offset_range=None`` (the streaming runners: no planned range) makes
+    the batch's OBSERVED [min, max] DML LSN span stand in for it — read
+    off the first collect over the reduce's winners, not a separate job.
+    An observed span is reported (``BatchResult.offset_range``, lineage)
+    and bounds the commit's ``commit_lsn_ranges`` entry, but it is never
+    recorded as an applied range: the batch need not hold every event
+    inside it, and a later planned run resuming from the table's ranges
+    would skip the missing ones.
     """
     t0 = time.time()
     phases: dict = {}
     key_cols = list(cfg.key_cols)
-
-    if offset_range is None:
-        row = batch_df.agg(
-            F.min(cfg.lsn_col).alias("lo"), F.max(cfg.lsn_col).alias("hi")
-        ).collect()[0]
-        if row["lo"] is None:
-            return BatchResult(batch_id, True, None, None, [], int((time.time() - t0) * 1000))
-        offset_range = (int(row["lo"]), int(row["hi"]))
-
+    # the range is planned, or observed later from the reduce's first
+    # collect: this phase runs no Spark job
     _pt = _tick("offset-range", t0, phases)
 
     # ---- exactly-once fast path: skip a fully-applied (replayed) range
-    if check_applied_range and table.is_range_applied(*offset_range):
+    if offset_range is not None and check_applied_range and table.is_range_applied(*offset_range):
         return BatchResult(batch_id, True, None, offset_range, [], int((time.time() - t0) * 1000))
 
     # ---- event-type filter (F1) — only DML row events flow
     batch_df = batch_df.filter(F.col(cfg.op_col).isin("insert", "update", "delete"))
 
-    # ---- schema reconciliation (D1-D5)
-    tschema = reconcile_schema(table, batch_df, cfg)
+    # ---- schema reconciliation (D1-D5); new columns are published only
+    # once the first collect shows the batch is not empty
+    tschema, added = reconcile_schema(table, batch_df, cfg)
     user_cols = [c for c in tschema.names if c not in (LSN_COL, BUCKET_COL, DELETED_COL)]
 
     # project batch to envelope (op, lsn) + value columns; value columns the
@@ -446,8 +498,9 @@ def apply_batch(
         # by the always-on map-side partial aggregation regardless: the
         # hot key reduces to <= one row per map partition before the
         # shuffle, which is precisely the case salting cannot improve.
-        span = offset_range[1] - offset_range[0] + 1
-        if span <= cfg.autosalt_threshold:
+        # Without a planned range the detector takes its no-hint path.
+        span = None if offset_range is None else offset_range[1] - offset_range[0] + 1
+        if span is not None and span <= cfg.autosalt_threshold:
             salt = 0
         else:
             from estuary_spark.operators.lww import choose_salt_factor
@@ -463,20 +516,26 @@ def apply_batch(
     winners = lww_reduce(changes, key_cols, lsn_col="lsn", salt_factor=salt, op_col="op")
 
     # ---- bucket routing (P2): the hash shuffle is the consistent-hash router
-    winners = winners.withColumn(BUCKET_COL, bucket_expr(key_cols[0], table.manifest()["n_buckets"]))
+    n_buckets = int(table.manifest()["n_buckets"])
+    winners = winners.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
     winners = winners.persist()
 
     if cfg.write_mode == "mor":
         try:
             return _apply_mor(
-                spark, table, winners, cfg, batch_id, offset_range, tschema, user_cols, t0, phases
+                spark, table, winners, cfg, batch_id, offset_range, tschema, added, user_cols, t0, phases
             )
         finally:
             if cached_changes is not None:
                 cached_changes.unpersist()
 
     try:
-        touched = [r[BUCKET_COL] for r in winners.select(BUCKET_COL).distinct().collect()]
+        # touched buckets and the observed LSN span in one collect
+        spans = (
+            winners.groupBy(BUCKET_COL)
+            .agg(F.min("_min_lsn").alias("lo"), F.max("lsn").alias("hi"))
+            .collect()
+        )
     finally:
         if cached_changes is not None:
             # winners is persisted and materialized by the collect above —
@@ -485,16 +544,30 @@ def apply_batch(
             # action time) from leaking the cache across retried batches
             cached_changes.unpersist()
     _pt = _tick("lww+touched", _pt, phases)
-    if not touched:
+    if not spans:
         winners.unpersist()
         return BatchResult(batch_id, True, None, offset_range, [], int((time.time() - t0) * 1000))
+    touched = [r[BUCKET_COL] for r in spans]
+    rng = offset_range or (min(int(r["lo"]) for r in spans), max(int(r["hi"]) for r in spans))
+    if added is not None:
+        table.evolve_schema(added)
 
     # ---- MERGE: bucket-pruned copy-on-write join (T2). Pin the snapshot
     # the merge is computed from and pass it as the commit's conflict-
     # validation base: a concurrent writer (maintenance job, rival sync)
     # landing between this read and the commit must surface as
-    # CommitConflictError, not silently lose its files.
-    base_v = table.current_version()
+    # CommitConflictError, not silently lose its files. A rebucket that
+    # landed before the pin changed the modulus the winners were routed
+    # with: the pinned snapshot's buckets are not theirs, and validation
+    # against it could not see that — a conflict too.
+    base = table._raw_manifest()
+    base_v = base["version"]
+    if int(base["n_buckets"]) != n_buckets:
+        winners.unpersist()
+        raise CommitConflictError(
+            f"{table.root!r} was rebucketed from {n_buckets} to {base['n_buckets']} "
+            "buckets during the batch; recompute it from the latest snapshot"
+        )
     target = table.read(spark, buckets=touched, include_tombstones=True, version=base_v)
 
     s = winners.select(
@@ -581,35 +654,15 @@ def apply_batch(
         .collect()
     )
     n_wins = sum(int(r["wins"] or 0) for r in agg_rows)
-    lineage_rows = [
-        {
-            "batch_id": batch_id,
-            "partition_id": int(r["b"]),
-            "offset_start": offset_range[0],
-            "offset_end": offset_range[1],
-            "rows_upserted": int(r["ups"] or 0),
-            "rows_deleted": int(r["dels"] or 0),
-            "late_events": int(r["late"] or 0),
-            "out_of_order_events": int(r["ooo"] or 0),
-        }
-        for r in agg_rows
-    ]
+    lineage_rows = _lineage_rows(agg_rows, batch_id, rng)
     _pt = _tick("lineage-agg", _pt, phases)
 
     if n_wins == 0:
-        # every source row lost the LSN guard: no data commit. True replay
-        # (range already applied) -> empty lineage; genuinely all-late
-        # batch -> keep the late/ooo lineage rows and record the range via
-        # a metadata-only commit (see the MoR branch for the rationale)
+        # every source row lost the LSN guard: no data commit (see
+        # _commit_no_wins)
         merged.unpersist()
         winners.unpersist()
-        wall = int((time.time() - t0) * 1000)
-        if table.is_range_applied(*offset_range):
-            return BatchResult(batch_id, True, None, offset_range, [], wall)
-        version = table.commit_metadata(applied_range=offset_range, batch_id=batch_id)
-        for r in lineage_rows:
-            r["wall_ms"] = wall
-        return BatchResult(batch_id, True, version, offset_range, lineage_rows, wall)
+        return _commit_no_wins(table, batch_id, offset_range, rng, lineage_rows, t0)
 
     # keep only physical table columns, in schema order (flags dropped)
     final = merged.select(*[c for c in tschema.names])
@@ -621,23 +674,11 @@ def apply_batch(
         applied_range=offset_range,
         batch_id=batch_id,
         new_schema=tschema,
-        extra_properties={
-            "last_batch": {
-                "batch_id": batch_id,
-                "offset_range": list(offset_range),
-                "upserted": sum(r["rows_upserted"] for r in lineage_rows),
-                "deleted": sum(r["rows_deleted"] for r in lineage_rows),
-                # M3: phase costs up to (not including) this commit
-                "phases_ms": dict(phases),
-            }
-        },
+        extra_properties=_last_batch(batch_id, rng, lineage_rows, phases),
         base_version=base_v,
+        lsn_range=rng,
     )
     _pt = _tick("commit", _pt, phases)
     merged.unpersist()
     winners.unpersist()
-
-    wall = int((time.time() - t0) * 1000)
-    for r in lineage_rows:
-        r["wall_ms"] = wall
-    return BatchResult(batch_id, False, version, offset_range, lineage_rows, wall, phases)
+    return _committed(batch_id, version, rng, lineage_rows, t0, phases)

@@ -328,15 +328,16 @@ def _apply_table_ops(batch: DataFrame, cfg: SyncConfig, tables: dict) -> DataFra
             F.col(cfg.lsn_col).alias("at"),
             sql_col.cast("string").alias("sql"),
         )
-        # ties on `at` (a real binlog never produces them; a synthetic or
-        # replayed feed can): Spark's sort is not stable for equal keys,
-        # so a deterministic secondary key is required — kind-ranked
-        # dependency order is applied after parsing (see below)
-        .orderBy("at", F.coalesce(sql_col.cast("string"), F.lit("")))
         .collect()
     )
     if not rows:
         return batch
+    # LSN order, sorted on the driver (op rows are few; a Spark orderBy
+    # costs a sampling job and a sort job on every batch, ops or not).
+    # Ties on `at` (a real binlog never produces them; a synthetic or
+    # replayed feed can) need a deterministic secondary key — kind-ranked
+    # dependency order is applied after parsing (see below)
+    rows.sort(key=lambda r: (r["at"], r["sql"] or ""))
 
     from estuary_spark.ddl import parse_ddl
 

@@ -90,10 +90,13 @@ def lww_reduce(
 ) -> DataFrame:
     """Reduce a change-event DataFrame to one winning event per key.
 
-    Returns one row per key with the highest-LSN event's columns.
-    Ties on LSN (duplicate-event injection / replay) are broken by op
-    priority (delete > update > insert) then deterministically — duplicates
-    are verbatim copies so any choice is identical.
+    Returns one row per key with the highest-LSN event's columns, the
+    key's event count ``_n_events`` and its LOWEST event LSN ``_min_lsn``
+    (with the winner's LSN, a batch's observed [min, max] span falls out of
+    any later aggregate over the winners — no separate pass over the
+    events). Ties on LSN (duplicate-event injection / replay) are broken by
+    op priority (delete > update > insert) then deterministically —
+    duplicates are verbatim copies so any choice is identical.
 
     ``salt_factor > 1`` enables the explicit two-phase salted reduce.
     """
@@ -114,6 +117,7 @@ def lww_reduce(
         partial = salted.groupBy(*key_cols, "_salt").agg(
             F.max_by(F.struct(*payload), ordering).alias("_w"),
             F.count(F.lit(1)).alias("_n"),
+            F.min(lsn_col).alias("_lo"),
         )
         # Phase-two ordering must carry the SAME op-rank tie-break as phase
         # one, recomputed from the phase-one winner's op column: an
@@ -133,10 +137,12 @@ def lww_reduce(
                 F.struct(F.col(f"_w.{lsn_col}").alias("_l"), w_rank.alias("_r")),
             ).alias("_w"),
             F.sum("_n").alias("_n_events"),
+            F.min("_lo").alias("_min_lsn"),
         )
     else:
         final = df.groupBy(*key_cols).agg(
             F.max_by(F.struct(*payload), ordering).alias("_w"),
             F.count(F.lit(1)).alias("_n_events"),
+            F.min(lsn_col).alias("_min_lsn"),
         )
-    return final.select(*key_cols, "_w.*", "_n_events")
+    return final.select(*key_cols, "_w.*", "_n_events", "_min_lsn")

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """16g, or half the machine's physical memory if that is less — a
+    local-mode driver holds the executors too, and a heap larger than
+    the machine gets the JVM killed under memory pressure instead of
+    spilling. ``ESTUARY_DRIVER_MEM`` overrides it."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "estuary_spark",
     cores: int | None = None,
@@ -41,7 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("ESTUARY_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("ESTUARY_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )

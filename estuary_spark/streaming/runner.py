@@ -11,11 +11,14 @@ atomic MERGE commit happen. ``MERGE`` has no direct streaming sink, so
 Exactly-once: Spark's checkpoint WAL gives at-least-once file replay;
 LWW-by-LSN makes the merge order-insensitive and idempotent, and a batch
 in which no source row beats the target's LSN guard (``wins == 0``) is
-detected and commits nothing — so replays produce zero new snapshots and
-file batches may arrive in any order yet converge to the same state.
-(The [min,max] applied-range fast path is NOT used here: file listing
-order is modification-time, not LSN, so range containment could falsely
-skip unapplied events.)
+detected after the merge join and commits nothing — so replays produce
+zero new snapshots and file batches may arrive in any order yet converge
+to the same state. File batches carry no planned LSN range: each one's
+[min, max] is observed from the LWW reduce's first collect, reported and
+recorded as the commit's change-feed span, but never as an applied range
+— file listing order is modification-time, not LSN, so a file's span can
+cover events that have not landed yet, and a later planned run resuming
+from the table's applied ranges would skip them.
 
 On a real cluster the same code runs with a Kafka source: swap
 ``readStream.parquet`` for ``readStream.format("kafka")`` + a payload
@@ -73,10 +76,9 @@ def run_sync_streaming(
         if on_batch is not None:
             on_batch(batch_df, int(batch_id), res)
         if res.skipped:
+            # no lineage either: an unplanned batch that commits nothing
+            # may be a replay, whose late counts must not count twice
             stats["skipped"] += 1
-            # all-late skipped batches still carry late/ooo lineage (M1)
-            if cfg.lineage_dir and res.lineage:
-                append_lineage(sess, cfg.lineage_dir, res.lineage)
             return
         stats["upserted"] += sum(r["rows_upserted"] for r in res.lineage)
         stats["deleted"] += sum(r["rows_deleted"] for r in res.lineage)

@@ -164,22 +164,6 @@ def _commit_dir_of(rel_file: str) -> str:
     return rel_file.split("/_bp=", 1)[0]
 
 
-def _ensure_dir_counts(props: dict, files: dict, delta_files: dict) -> None:
-    """Initialize ``properties["commit_dir_files"]`` (live file count per
-    commit directory) from a full inventory — one-time upgrade path for
-    snapshots that predate the counter; every table created by this code
-    starts with the key present and pays only incremental updates."""
-    if "commit_dir_files" in props:
-        return
-    counts: dict[str, int] = {}
-    for kind in (files, delta_files):
-        for fl in kind.values():
-            for f in fl:
-                d = _commit_dir_of(f)
-                counts[d] = counts.get(d, 0) + 1
-    props["commit_dir_files"] = counts
-
-
 def _update_commit_ranges(
     props: dict,
     commit_rel: str,
@@ -333,8 +317,6 @@ class LakeTable:
         Callers must treat the materialized file LISTS as immutable: they
         are shared with the shard cache (copy before extending)."""
         raw = self._raw_manifest(version)
-        if "shards" not in raw:
-            return raw  # format-1 snapshot: inventory is inline
         S = int(raw.get("shard_buckets", DEFAULT_SHARD_BUCKETS))
         wanted = None if buckets is None else {int(b) // S for b in buckets}
         files: dict = {}
@@ -739,11 +721,18 @@ class LakeTable:
         extra_properties: dict | None = None,
         new_n_buckets: int | None = None,
         base_version: int | None = None,
+        lsn_range: tuple[int, int] | None = None,
     ) -> int:
         """Copy-on-write commit: write ``df`` (which must contain all rows
         for ``replaced_buckets`` and only those buckets), then publish a
         manifest where those buckets' files are replaced and the applied
         LSN range is fused into the snapshot properties.
+
+        ``lsn_range`` is an LSN span the batch was OBSERVED to cover
+        without being planned (a streaming file batch): it bounds the
+        commit's ``commit_lsn_ranges`` entry like an applied range does,
+        but never enters ``applied_ranges`` — the batch need not hold
+        every event inside it.
 
         ``base_version`` is the snapshot the rewrite was COMPUTED from
         (capture ``current_version()`` before calling ``read()``). The
@@ -787,32 +776,7 @@ class LakeTable:
         commit_rel = os.path.join(
             DATA_DIR, f"commit-{m0['version'] + 1:010d}-{uuid.uuid4().hex[:8]}"
         )
-        commit_dir = os.path.join(self.root, commit_rel)
-
-        # write one directory per commit, hive-partitioned by bucket; the
-        # partition column is a throwaway copy so _bucket stays in the data.
-        # Repartition on the bucket id first: without it every task writes a
-        # file into every bucket dir (tasks x buckets small files, and target
-        # reads degrade every commit); with it a commit produces ~1 file per
-        # touched bucket. files_per_bucket>1 would raise write parallelism
-        # for very large buckets (knob for the 100 TB case).
-        n_out = max(1, len(replaced_buckets))
-        out = df.repartition(n_out, F.col(BUCKET_COL)).withColumn("_bp", F.col(BUCKET_COL))
-        out.write.partitionBy("_bp").mode("overwrite").parquet(commit_dir)
-
-        # collect produced files per bucket from the filesystem (driver-side
-        # listing is O(#touched buckets), not O(rows))
-        new_files: dict[str, list[str]] = {}
-        for entry in self.io.list_dir(commit_dir):
-            if not entry.startswith("_bp="):
-                continue
-            b = str(int(entry.split("=", 1)[1]))
-            bdir = os.path.join(commit_dir, entry)
-            new_files[b] = [
-                os.path.join(commit_rel, entry, f)
-                for f in self.io.list_dir(bdir)
-                if f.endswith(".parquet")
-            ]
+        new_files = self._write_buckets(spark, df, commit_rel, len(replaced_buckets))
 
         return self._commit_cow_meta(
             m0,
@@ -825,7 +789,34 @@ class LakeTable:
             schema_req,
             extra_properties,
             new_n_buckets,
+            lsn_range,
         )
+
+    def _write_buckets(
+        self, spark: SparkSession, df: DataFrame, commit_rel: str, n_touched: int
+    ) -> dict[str, list[str]]:
+        """Write ``df`` as one new commit directory, hive-partitioned by
+        bucket (the partition column is a throwaway copy, so ``_bucket``
+        stays in the data), and return the new data files per bucket.
+
+        The repartition on the bucket id sends each bucket whole to one
+        task, so the commit writes exactly one file per touched bucket.
+        The task count is the touched-bucket count capped at the cores: a
+        small batch touching every bucket of a 32-bucket table writes a
+        few KB per bucket, and 32 tasks for that cost more in scheduling
+        than they write. One recursive walk of the new directory finds
+        the files (O(files written), not one listing per bucket)."""
+        commit_dir = os.path.join(self.root, commit_rel)
+        n_out = max(1, min(int(n_touched), spark.sparkContext.defaultParallelism))
+        out = df.repartition(n_out, F.col(BUCKET_COL)).withColumn("_bp", F.col(BUCKET_COL))
+        out.write.partitionBy("_bp").mode("overwrite").parquet(commit_dir)
+        new_files: dict[str, list[str]] = {}
+        for path in sorted(self.io.walk_files(commit_dir)):
+            part, name = os.path.split(os.path.relpath(path, commit_dir))
+            if name.endswith(".parquet") and part.startswith("_bp="):
+                b = str(int(part.split("=", 1)[1]))
+                new_files.setdefault(b, []).append(os.path.join(commit_rel, part, name))
+        return new_files
 
     def _commit_cow_meta(
         self,
@@ -839,6 +830,7 @@ class LakeTable:
         schema_req: T.StructType,
         extra_properties: dict | None,
         new_n_buckets: int | None,
+        lsn_range=None,
     ) -> int:
         """The metadata phase of a copy-on-write commit (everything after
         the data files exist): conflict validation, inventory update,
@@ -883,7 +875,6 @@ class LakeTable:
             }
 
             props = dict(m.get("properties", {}))
-            _ensure_dir_counts(props, m["files"], m.get("delta_files", {}))
             ranges = [list(r) for r in props.get("applied_ranges", [])]
             if applied_range is not None:
                 ranges.append([int(applied_range[0]), int(applied_range[1])])
@@ -893,11 +884,13 @@ class LakeTable:
             if extra_properties:
                 props.update(extra_properties)
             # a COW rewrite folds a bucket's whole history into the new files,
-            # so the commit's LSN span is [0, max applied hi] — compaction and
-            # tombstone purges (applied_range=None) get the same conservative
-            # bound from the already-fused applied ranges. A table populated
-            # via direct commit() calls with no applied-range bookkeeping has
-            # no basis for a bound: record nothing (readers treat an absent
+            # so the commit's LSN span is [0, highest LSN the table holds]:
+            # the max over the applied ranges, the live commits' recorded
+            # spans (a streaming table records only those) and this batch's
+            # observed span. Compaction and tombstone purges (no range of
+            # their own) get the same conservative bound. A table populated
+            # via direct commit() calls with no range bookkeeping has no
+            # basis for a bound: record nothing (readers treat an absent
             # entry as "may contain anything" — conservative, never pruned)
             # rather than a wrong [0, 0] that read_changes would prune away.
             added = [f for fl in new_files.values() for f in fl]
@@ -907,11 +900,11 @@ class LakeTable:
                 for kind in (m["files"], m.get("delta_files", {}))
                 for f in kind.get(str(b), [])
             ]
-            span = (
-                [0, max(r[1] for r in props["applied_ranges"])]
-                if props["applied_ranges"]
-                else None
-            )
+            his = [r[1] for r in props["applied_ranges"]]
+            his += [r[1] for r in props.get("commit_lsn_ranges", {}).values()]
+            if lsn_range is not None:
+                his.append(int(lsn_range[1]))
+            span = [0, max(his)] if his else None
             _update_commit_ranges(props, commit_rel, span, added, removed)
 
             return {
@@ -936,11 +929,16 @@ class LakeTable:
         batch_id: int | None,
         new_schema: T.StructType | None = None,
         extra_properties: dict | None = None,
+        lsn_range: tuple[int, int] | None = None,
     ) -> int:
         """Merge-on-read commit: append ``df`` (LWW winners for one batch,
         carrying ``_lsn``/``_deleted``/``_bucket``) as delta files — no
         target read, no join, no rewrite. Readers fold deltas per key at
         scan time; ``maintenance.compact`` folds them back into base files.
+
+        ``lsn_range`` is the batch's observed LSN span when it differs
+        from (or stands in for) ``applied_range``: it becomes the delta
+        commit's ``commit_lsn_ranges`` entry but not an applied range.
 
         This is the Iceberg ``write.merge.mode=merge-on-read`` analogue and
         the 10^10-event scale path: per-batch write cost is O(batch), not
@@ -959,31 +957,18 @@ class LakeTable:
         commit_rel = os.path.join(
             DATA_DIR, f"delta-{m0['version'] + 1:010d}-{uuid.uuid4().hex[:8]}"
         )
-        commit_dir = os.path.join(self.root, commit_rel)
-        m = m0  # bucket layout (n_buckets) is fixed at create time
-        # repartition on the bucket id first — without it every task writes
-        # a file into every bucket dir (tasks x buckets small files per
-        # commit, and the fold-on-read degrades immediately); with it a
-        # delta commit adds ~1 file per touched bucket
-        out = df.repartition(m["n_buckets"], F.col(BUCKET_COL)).withColumn(
-            "_bp", F.col(BUCKET_COL)
-        )
-        out.write.partitionBy("_bp").mode("overwrite").parquet(commit_dir)
-
-        new_by_bucket: dict[str, list[str]] = {}
-        for entry in self.io.list_dir(commit_dir):
-            if not entry.startswith("_bp="):
-                continue
-            b = str(int(entry.split("=", 1)[1]))
-            bdir = os.path.join(commit_dir, entry)
-            new_by_bucket.setdefault(b, []).extend(
-                os.path.join(commit_rel, entry, f)
-                for f in self.io.list_dir(bdir)
-                if f.endswith(".parquet")
-            )
+        # bucket layout (n_buckets) is fixed at create time
+        new_by_bucket = self._write_buckets(spark, df, commit_rel, m0["n_buckets"])
 
         return self._commit_delta_meta(
-            m0, commit_rel, new_by_bucket, applied_range, batch_id, schema_req, extra_properties
+            m0,
+            commit_rel,
+            new_by_bucket,
+            applied_range,
+            batch_id,
+            schema_req,
+            extra_properties,
+            lsn_range,
         )
 
     def _commit_delta_meta(
@@ -995,6 +980,7 @@ class LakeTable:
         batch_id,
         schema_req: T.StructType,
         extra_properties: dict | None,
+        lsn_range=None,
     ) -> int:
         """The metadata phase of a merge-on-read delta commit (everything
         after the data files exist). Factored out so
@@ -1015,7 +1001,6 @@ class LakeTable:
                 delta_files[b] = list(delta_files.get(b, [])) + fl
 
             props = dict(m.get("properties", {}))
-            _ensure_dir_counts(props, m["files"], m.get("delta_files", {}))
             ranges = [list(r) for r in props.get("applied_ranges", [])]
             if applied_range is not None:
                 ranges.append([int(applied_range[0]), int(applied_range[1])])
@@ -1025,10 +1010,12 @@ class LakeTable:
             if extra_properties:
                 props.update(extra_properties)
             # a delta commit contains ONLY the batch's winner rows, so its LSN
-            # span is exactly the applied range — the tight bound that lets an
-            # incremental reader catching up from LSN X skip every older delta
+            # span is exactly the batch's range (observed, else applied) — the
+            # tight bound that lets an incremental reader catching up from
+            # LSN X skip every older delta
             added = [f for fl in new_by_bucket.values() for f in fl]
-            _update_commit_ranges(props, commit_rel, applied_range, added, [])
+            span = lsn_range if lsn_range is not None else applied_range
+            _update_commit_ranges(props, commit_rel, span, added, [])
 
             return {
                 "version": m["version"] + 1,

@@ -255,3 +255,51 @@ def test_mor_delete_then_reinsert_across_batches(spark, tmpdir_path):
     out = read_final_state(spark, cfg).collect()
     assert len(out) == 1
     assert out[0]["text"] == "v3"
+
+
+def test_commit_writes_one_file_per_touched_bucket(spark, tmpdir_path):
+    """COW commit, MoR delta commit and compaction on a 32-bucket table
+    each write exactly one parquet file per touched bucket — however few
+    tasks the write runs — and the manifest lists exactly those files."""
+    from collections import Counter
+
+    from estuary_spark.tables import bucket_expr
+
+    rows = [(i, "insert", f"c{i % 400}", i % 3, f"t{i}") for i in range(1200)]
+    log_dir = os.path.join(tmpdir_path, "log")
+    log = spark.createDataFrame(rows, ["lsn", "op", "conv_id", "turn_idx", "text"])
+    log.write.parquet(log_dir)
+    touched = {r[0] for r in log.select(bucket_expr("conv_id", 32)).distinct().collect()}
+    assert len(touched) > spark.sparkContext.defaultParallelism
+
+    def newest_commit_layout(t):
+        v = t.current_version()
+        m = t.manifest()
+        listed = {f for kind in ("files", "delta_files") for fl in m[kind].values() for f in fl}
+        listed = {f for f in listed if f"-{v:010d}-" in f}
+        (cdir,) = {f.split("/_bp=")[0] for f in listed}
+        on_disk = {
+            os.path.relpath(os.path.join(d, n), t.root)
+            for d, _sub, names in os.walk(os.path.join(t.root, cdir))
+            for n in names
+            if n.endswith(".parquet")
+        }
+        assert listed == on_disk
+        return Counter(int(f.split("_bp=")[1].split("/")[0]) for f in on_disk)
+
+    for mode in ("cow", "mor"):
+        cfg = SyncConfig(
+            source_log_dir=log_dir,
+            target_table_dir=os.path.join(tmpdir_path, mode),
+            n_buckets=32,
+            envelope_cols=("lsn", "op"),
+            write_mode=mode,
+            compact_every=0,
+        )
+        run_sync(spark, cfg, events_per_batch=10_000)
+        t = LakeTable(cfg.target_table_dir)
+        assert newest_commit_layout(t) == {b: 1 for b in touched}, mode
+        if mode == "mor":
+            assert compact(spark, t, max_files_per_bucket=10**9, max_delta_files_per_bucket=0) == len(touched)
+            assert newest_commit_layout(t) == {b: 1 for b in touched}
+            assert t.delta_buckets() == []

@@ -191,3 +191,46 @@ def test_concurrent_rebuckets_one_typed_loser(spark, tmpdir_path):
         .count()
         == 0
     )
+
+
+def test_rebucket_after_routing_fails_the_cow_batch(spark, tmpdir_path, monkeypatch):
+    """The interleaving the live race above can hit: a rebucket lands
+    after a copy-on-write batch routed its winners with the old modulus
+    but before the batch pins its merge snapshot. The batch must fail with
+    the typed conflict instead of committing old-modulus rows into the new
+    layout; the checkpointed re-run converges under the new modulus."""
+    import pytest
+
+    import estuary_spark.apply as A
+    from estuary_spark.tables import CommitConflictError
+
+    log_dir = os.path.join(tmpdir_path, "log")
+    root = os.path.join(tmpdir_path, "t")
+    write_log(spark, LogSpec(n_convs=30, max_turns=6, seed=85, delete_pct=15), log_dir)
+    cfg = SyncConfig(
+        source_log_dir=log_dir, target_table_dir=root, n_buckets=8,
+        checkpoint_path=os.path.join(tmpdir_path, "ck.json"),
+    )
+    run_sync(spark, cfg, events_per_batch=150, max_batches=1)
+
+    real = A.bucket_expr
+    moduli: list = []
+
+    def route_then_rebucket(key_col, n_buckets):
+        expr = real(key_col, n_buckets)
+        if not moduli:
+            moduli.append(n_buckets)
+            rebucket(spark, LakeTable(root), 32)
+        return expr
+
+    monkeypatch.setattr(A, "bucket_expr", route_then_rebucket)
+    with pytest.raises(CommitConflictError):
+        run_sync(spark, cfg, events_per_batch=150)
+    assert moduli == [8]
+    monkeypatch.undo()
+
+    run_sync(spark, cfg, events_per_batch=150)
+    t = LakeTable(root)
+    assert t.manifest()["n_buckets"] == 32
+    assert _state(spark, root) == _fold(spark, read_log(spark, log_dir))
+    assert t.read(spark).filter(F.col(BUCKET_COL) != bucket_expr("conv_id", 32)).count() == 0
