@@ -100,6 +100,7 @@ def _apply_mor(
     tschema: T.StructType,
     added: T.StructType | None,
     user_cols: list[str],
+    n_buckets: int,
     t0: float,
     phases: dict,
 ) -> "BatchResult":
@@ -125,11 +126,13 @@ def _apply_mor(
     loser (nondeterministic fold tie with the base row) is filtered out
     via a broadcast anti-join paid only when such a tie exists — which
     normal operation never produces (pure replays take the wins==0 path).
+    ``n_buckets`` is the modulus the winners were routed with; the delta
+    commit fails with ``CommitConflictError`` if the table's layout no
+    longer has it (a rebucket landed during the batch).
     """
     key_cols = list(cfg.key_cols)
     _pt = time.time()
 
-    n_buckets = int(table.manifest()["n_buckets"])
     prune = cfg.mor_prune_buckets if cfg.mor_prune_buckets is not None else n_buckets >= 256
     touched: list[int] | None = None
     if prune:
@@ -259,6 +262,7 @@ def _apply_mor(
         new_schema=tschema,
         extra_properties=_last_batch(batch_id, rng, lineage_rows, phases),
         lsn_range=rng,
+        n_buckets=n_buckets,
     )
     _pt = _tick("mor-commit", _pt, phases)
     winners.unpersist()
@@ -515,15 +519,17 @@ def apply_batch(
             )
     winners = lww_reduce(changes, key_cols, lsn_col="lsn", salt_factor=salt, op_col="op")
 
-    # ---- bucket routing (P2): the hash shuffle is the consistent-hash router
-    n_buckets = int(table.manifest()["n_buckets"])
+    # ---- bucket routing (P2): the hash shuffle is the consistent-hash router;
+    # the raw snapshot carries n_buckets without the file inventory
+    n_buckets = int(table._raw_manifest()["n_buckets"])
     winners = winners.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
     winners = winners.persist()
 
     if cfg.write_mode == "mor":
         try:
             return _apply_mor(
-                spark, table, winners, cfg, batch_id, offset_range, tschema, added, user_cols, t0, phases
+                spark, table, winners, cfg, batch_id, offset_range, tschema, added, user_cols,
+                n_buckets, t0, phases,
             )
         finally:
             if cached_changes is not None:

@@ -115,10 +115,12 @@ _ADD_COL = re.compile(
     re.I,
 )
 # DROP COLUMN — but never DROP PRIMARY KEY / INDEX / KEY / FOREIGN KEY /
-# CONSTRAINT / PARTITION (index-level drops are no-ops for a data mirror)
+# CONSTRAINT / PARTITION (index-level drops are no-ops for a data mirror).
+# Only the bare ``DROP <ident>`` form can mean those, so an explicit
+# ``DROP COLUMN key`` still drops the column named ``key``
 _DROP_COL = re.compile(
-    rf"^DROP\s+(?:COLUMN\s+)?(?:IF\s+EXISTS\s+)?"
-    rf"(?!PRIMARY\b|INDEX\b|KEY\b|FOREIGN\b|CONSTRAINT\b|PARTITION\b|CHECK\b){_IDENT}\s*$",
+    rf"^DROP\s+(?:COLUMN\s+(?:IF\s+EXISTS\s+)?|(?:IF\s+EXISTS\s+)?"
+    rf"(?!PRIMARY\b|INDEX\b|KEY\b|FOREIGN\b|CONSTRAINT\b|PARTITION\b|CHECK\b)){_IDENT}\s*$",
     re.I,
 )
 _MODIFY_COL = re.compile(rf"^MODIFY\s+(?:COLUMN\s+)?{_IDENT}\b", re.I)

@@ -447,16 +447,6 @@ def simhash_from_hashes(hashes: Column, nbits: int = 64) -> Column:
     return F.aggregate(bits, F.lit(0).cast("long"), lambda a, b: a.bitwiseOR(b))
 
 
-def simhash_bands(col: Column, band_bits: int = 16) -> Column:
-    """Split a simhash into bands for candidate blocking (hamming-LSH)."""
-    sh = simhash64(col)
-    nb = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    return F.array(
-        *[F.shiftright(sh, i * band_bits).bitwiseAND(F.lit(mask)) for i in range(nb)]
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 

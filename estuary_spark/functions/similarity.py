@@ -73,20 +73,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from hyperplane dot products (JVM-side)."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.when(dot(vec, plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
-
-
 def lsh_table_buckets(vec: Column, tables: list[list[list[float]]], n_planes: int) -> Column:
     """Keyed bucket ids for ALL hash tables in one expression.
 

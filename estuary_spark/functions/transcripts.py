@@ -16,7 +16,7 @@ from collections.abc import Callable
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 TransformFn = Callable[[DataFrame], DataFrame]
@@ -33,10 +33,6 @@ def register_transform(name: str):
         return fn
 
     return deco
-
-
-def get_transform(name: str) -> TransformFn:
-    return _REGISTRY[name]
 
 
 def transform_chain(df: DataFrame, names: list[str]) -> DataFrame:
@@ -80,14 +76,3 @@ def redact_pii(df: DataFrame) -> DataFrame:
         return df
     return df.withColumn("text", redact_emails(F.col("text")))
 
-
-def role_turn_stats(df: DataFrame) -> DataFrame:
-    """Per-conversation stats: turn counts by role, total chars — a
-    typical transcript-analytics rollup over the final table."""
-    return df.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).alias("user_turns"),
-        F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).alias("assistant_turns"),
-        F.sum(F.when(F.col("role") == "tool", 1).otherwise(0)).alias("tool_turns"),
-        F.sum(F.length("text")).alias("total_chars"),
-    )

@@ -1,5 +1,7 @@
 """Structured Streaming front-end: tail the change log as a file stream
-and apply each micro-batch through the same ``apply_batch`` core.
+and apply each micro-batch through the one sync loop's ``foreachBatch``
+wrapper (``runner.run_stream``) with the same single-table step as the
+planned runner (``apply_batch`` + ``finish_batch``).
 
 estuary mapping (SURVEY.md §2.1 S1/S3, §3.2): the binlog dump protocol +
 blocking fetch loop become ``spark.readStream`` over the ordered log; the
@@ -29,10 +31,10 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from estuary_spark.apply import apply_batch
+from estuary_spark.apply import apply_batch  # noqa: F401 — unused here; perfbench/tracing.py wraps it
 from estuary_spark.config import SyncConfig
-from estuary_spark.lineage import append_lineage
-from estuary_spark.runner import open_or_create_table
+from estuary_spark.lineage import append_lineage  # noqa: F401 — unused here; perfbench/tracing.py wraps it
+from estuary_spark.runner import new_tally, open_or_create_table, run_stream, table_step
 from estuary_spark.sources.log_source import LogSource, ParquetLogSource
 
 
@@ -48,69 +50,34 @@ def run_sync_streaming(
 ) -> dict:
     """Run the sync task as a streaming query. With ``available_now`` the
     query drains the current log and stops (deterministic; used by tests);
-    with ``processing_time`` it tails the log continuously. ``source`` is
-    any :class:`LogSource` (default :class:`ParquetLogSource`); a
-    :class:`KafkaLogSource` drops in unchanged — the apply core is
-    source-agnostic. ``on_batch(batch_df, batch_id, result)`` is an
-    optional observer invoked after each micro-batch's apply+commit
-    (latency instrumentation — tools/streaming_bench.py)."""
+    with ``processing_time`` it tails the log continuously and the running
+    query comes back as ``"query"``. ``source`` is any :class:`LogSource`
+    (default :class:`ParquetLogSource`); a :class:`KafkaLogSource` drops
+    in unchanged — the apply core is source-agnostic.
+    ``on_batch(batch_df, batch_id, result)`` is an optional observer
+    invoked after each micro-batch's apply, commit and finish step
+    (latency instrumentation — tools/streaming_bench.py).
+
+    Returns {"batches": n, "skipped": n, "upserted": n, "deleted": n}."""
     source = source or ParquetLogSource(cfg.source_log_dir, lsn_col=cfg.lsn_col)
-    static = source.read_batch(spark)
-    table = open_or_create_table(spark, cfg, static)
+    table = open_or_create_table(spark, cfg, source.read_batch(spark))
+    tally = new_tally()
+    apply_one = table_step(table, cfg, tally)
 
-    stream = source.read_stream(spark, max_files_per_trigger=max_files_per_trigger)
-
-    stats = {"batches": 0, "skipped": 0, "upserted": 0, "deleted": 0}
-
-    def handle(batch_df, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        # file batches arrive in listing (modification-time) order, NOT LSN
-        # order, so [min,max]-range containment is not a safe replay test
-        # here (a later batch's range can nest inside the union of earlier
-        # ones with its events never applied) — rely on the wins==0 no-op
-        # detection after the LSN-guard join instead
-        res = apply_batch(
-            sess, table, batch_df, cfg, int(batch_id), offset_range=None, check_applied_range=False
-        )
-        stats["batches"] += 1
+    def step(sess, batch_df, batch_id: int, offset_range) -> None:
+        res = apply_one(sess, batch_df, batch_id, offset_range)
         if on_batch is not None:
-            on_batch(batch_df, int(batch_id), res)
-        if res.skipped:
-            # no lineage either: an unplanned batch that commits nothing
-            # may be a replay, whose late counts must not count twice
-            stats["skipped"] += 1
-            return
-        stats["upserted"] += sum(r["rows_upserted"] for r in res.lineage)
-        stats["deleted"] += sum(r["rows_deleted"] for r in res.lineage)
-        if cfg.lineage_dir:
-            append_lineage(sess, cfg.lineage_dir, res.lineage)
-        # MoR: bound the per-bucket delta chain (same policy as the batch
-        # runner) — foreachBatch is the drained-pipeline point, so the
-        # compaction commit can't race an in-flight merge
-        if cfg.write_mode == "mor" and cfg.compact_every > 0:
-            from estuary_spark.maintenance import compact
+            on_batch(batch_df, batch_id, res)
 
-            dcounts = table.manifest().get("delta_files", {})
-            if dcounts and max(len(v) for v in dcounts.values()) >= cfg.compact_every:
-                compact(
-                    sess,
-                    table,
-                    max_files_per_bucket=10**9,
-                    max_delta_files_per_bucket=max(0, cfg.compact_every - 1),
-                )
+    def report(n: int) -> dict:
+        return {
+            "batches": n,
+            "skipped": n - tally["batches_run"],
+            "upserted": tally["rows_upserted"],
+            "deleted": tally["rows_deleted"],
+        }
 
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("update")
+    return run_stream(
+        spark, source, checkpoint_location, max_files_per_trigger, available_now,
+        processing_time, step, report,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    else:
-        return {"query": q, **stats}
-    return stats

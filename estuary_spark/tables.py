@@ -235,6 +235,16 @@ class CommitConflictError(RuntimeError):
 MAX_COMMIT_RETRIES = 5
 
 
+def _check_n_buckets(root: str, m: dict, n_buckets: int | None) -> None:
+    """Raise if snapshot ``m`` no longer has the bucket modulus a commit's
+    rows were routed with (a rebucket landed in between)."""
+    if n_buckets is not None and int(m["n_buckets"]) != int(n_buckets):
+        raise CommitConflictError(
+            f"{root!r} was rebucketed from {n_buckets} to {m['n_buckets']} "
+            "buckets during the batch; recompute it from the latest snapshot"
+        )
+
+
 def _union_schema(a: T.StructType, b: T.StructType) -> T.StructType:
     """Additive union: fields of ``a`` (authoritative types) plus any
     fields only ``b`` has — rebasing a commit onto a concurrently-evolved
@@ -930,6 +940,7 @@ class LakeTable:
         new_schema: T.StructType | None = None,
         extra_properties: dict | None = None,
         lsn_range: tuple[int, int] | None = None,
+        n_buckets: int | None = None,
     ) -> int:
         """Merge-on-read commit: append ``df`` (LWW winners for one batch,
         carrying ``_lsn``/``_deleted``/``_bucket``) as delta files — no
@@ -950,8 +961,13 @@ class LakeTable:
         race rebases it onto the latest snapshot automatically (the
         Iceberg fast-append retry; LWW folding makes concurrent appends
         commutative at read time), so N writers on one table all succeed.
+        ``n_buckets`` is the modulus ``df``'s bucket ids were routed with:
+        if the snapshot loaded here, or any a rebase lands on, has another
+        (a rebucket landed since routing), :class:`CommitConflictError` is
+        raised instead of appending rows under old-modulus bucket ids.
         """
         m0 = self.manifest()
+        _check_n_buckets(self.root, m0, n_buckets)
         schema_req = new_schema if new_schema is not None else T.StructType.fromJson(m0["schema"])
 
         commit_rel = os.path.join(
@@ -969,6 +985,7 @@ class LakeTable:
             schema_req,
             extra_properties,
             lsn_range,
+            n_buckets,
         )
 
     def _commit_delta_meta(
@@ -981,6 +998,7 @@ class LakeTable:
         schema_req: T.StructType,
         extra_properties: dict | None,
         lsn_range=None,
+        n_buckets: int | None = None,
     ) -> int:
         """The metadata phase of a merge-on-read delta commit (everything
         after the data files exist). Factored out so
@@ -988,6 +1006,7 @@ class LakeTable:
         through the exact production code path."""
 
         def build(m: dict) -> dict:
+            _check_n_buckets(self.root, m, n_buckets)
             schema = (
                 _union_schema(schema_req, T.StructType.fromJson(m["schema"]))
                 if m is not m0

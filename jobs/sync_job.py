@@ -143,39 +143,35 @@ def main() -> None:
 
         source = TableChangesLogSource(args.source)
 
+    if args.streaming and not args.checkpoint:
+        sys.exit("--checkpoint (a directory) is required with --streaming")
     if args.table_col:
         if args.streaming:
             from estuary_spark.multi import run_sync_streaming_multi
 
-            if not args.checkpoint:
-                sys.exit("--checkpoint (a directory) is required with --streaming")
-            print(json.dumps(run_sync_streaming_multi(
+            stats = run_sync_streaming_multi(
                 spark, cfg, args.checkpoint,
                 available_now=args.continuous is None,
                 processing_time=args.continuous,
-            )))
+            )
         else:
             from estuary_spark.multi import run_sync_multi
 
-            print(json.dumps(run_sync_multi(spark, cfg, events_per_batch=args.events_per_batch)))
+            stats = run_sync_multi(spark, cfg, events_per_batch=args.events_per_batch)
     elif args.streaming:
         from estuary_spark.streaming import run_sync_streaming
 
-        if not args.checkpoint:
-            sys.exit("--checkpoint (a directory) is required with --streaming")
         stats = run_sync_streaming(
             spark, cfg, args.checkpoint, source=source,
             available_now=args.continuous is None,
             processing_time=args.continuous,
         )
-        q = stats.pop("query", None)
-        if q is not None:
-            q.awaitTermination()  # tail until SIGTERM (replay-safe: C5)
-        print(json.dumps(stats))
     else:
-        summary = run_sync(spark, cfg, events_per_batch=args.events_per_batch, source=source)
-        print(json.dumps(summary.__dict__))
-
+        stats = run_sync(spark, cfg, events_per_batch=args.events_per_batch, source=source).__dict__
+    q = stats.pop("query", None)
+    if q is not None:
+        q.awaitTermination()  # tail until SIGTERM (replay-safe: C5)
+    print(json.dumps(stats))
 
 if __name__ == "__main__":
     main()

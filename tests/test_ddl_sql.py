@@ -214,6 +214,19 @@ def test_parse_ddl_round5_statements():
     assert [k for k, _ in p["actions"]] == ["add_column", "drop_column", "rename_column"]
 
 
+def test_parse_drop_column_named_like_a_reserved_word():
+    """An explicit ``DROP COLUMN`` drops a column even when its name is a
+    word the bare ``DROP <ident>`` form reserves for index-level drops."""
+    for name in ("key", "index", "primary", "check"):
+        p = parse_ddl(f"ALTER TABLE t DROP COLUMN {name}")
+        assert p["op"] == "drop_column" and p["columns"] == [name], p
+    assert parse_ddl("ALTER TABLE t DROP COLUMN IF EXISTS `key`")["columns"] == ["key"]
+    # the bare form still leaves index-level drops alone
+    assert parse_ddl("ALTER TABLE t DROP KEY k")["op"] == "unsupported"
+    assert parse_ddl("ALTER TABLE t DROP FOREIGN KEY fk")["op"] == "unsupported"
+    assert parse_ddl("ALTER TABLE t DROP x")["columns"] == ["x"]
+
+
 def test_ddl_drop_column_end_to_end(spark, tmpdir_path):
     """DROP COLUMN is metadata-only: the column reads NULL from the drop
     LSN for EVERY row (MySQL drops it instantly), post-drop event values

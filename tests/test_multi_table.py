@@ -305,3 +305,117 @@ def test_parallel_fanout_failure_isolated(spark, tmpdir_path):
     run_sync_multi(spark, cfg2, events_per_batch=100)
     got2 = {(r["conv_id"], r["text"]) for r in good.read(spark).collect()}
     assert got2 == got
+
+
+# ---- the one sync loop: both multi-table drivers finish every table's
+# batch like a single-table sync does (lineage, MoR compaction, stats)
+
+
+def _role_log(spark, tmpdir_path, n_files):
+    from estuary_spark.generator import LogSpec, write_log
+
+    log_dir = os.path.join(tmpdir_path, "log")
+    write_log(spark, LogSpec(n_convs=80, max_turns=6, seed=93), log_dir, n_files=n_files)
+    return log_dir
+
+
+def _role_cfg(log_dir, tmpdir_path, **kw):
+    return SyncConfig(
+        source_log_dir=log_dir,
+        target_table_dir=os.path.join(tmpdir_path, "tables"),
+        lineage_dir=os.path.join(tmpdir_path, "lineage"),
+        n_buckets=4,
+        table_col="role",
+        **kw,
+    )
+
+
+def _max_deltas_per_bucket(cfg) -> dict:
+    root = cfg.target_table_dir
+    return {
+        d: max(
+            (len(fl) for fl in LakeTable(os.path.join(root, d)).manifest()["delta_files"].values()),
+            default=0,
+        )
+        for d in sorted(os.listdir(root))
+    }
+
+
+def _assert_folded(spark, cfg, log_dir):
+    from estuary_spark.generator import expected_final_state, read_log
+
+    got = {
+        (r["conv_id"], r["turn_idx"]): r["text"]
+        for r in read_final_state_multi(spark, cfg).collect()
+    }
+    want = {
+        (r["conv_id"], r["turn_idx"]): r["text"]
+        for r in expected_final_state(read_log(spark, log_dir)).collect()
+    }
+    assert got == want
+
+
+def test_multi_mor_compacts_every_destination(spark, tmpdir_path):
+    """Planned multi-table MoR sync applies the single-table compaction
+    policy to every destination: with ``compact_every=2`` no bucket is
+    left holding two delta files after four batches."""
+    log_dir = _role_log(spark, tmpdir_path, n_files=4)
+    n = spark.read.parquet(log_dir).count()
+    cfg = _role_cfg(log_dir, tmpdir_path, write_mode="mor", compact_every=2)
+    s = run_sync_multi(spark, cfg, events_per_batch=n // 4 + 1)
+    assert s["batches"] == 4
+    chains = _max_deltas_per_bucket(cfg)
+    assert sorted(chains) == ["assistant", "system", "tool", "user"]
+    assert all(c < 2 for c in chains.values()), chains
+    assert all(t["batches_run"] == 4 for t in s["tables"].values()), s
+    _assert_folded(spark, cfg, log_dir)
+
+
+def test_streaming_multi_mor_compacts_every_destination(spark, tmpdir_path):
+    """The streaming multi-table driver applies the same policy per file
+    batch."""
+    from estuary_spark.multi import run_sync_streaming_multi
+
+    log_dir = _role_log(spark, tmpdir_path, n_files=4)
+    cfg = _role_cfg(log_dir, tmpdir_path, write_mode="mor", compact_every=2)
+    s = run_sync_streaming_multi(
+        spark, cfg, os.path.join(tmpdir_path, "ckpt"), max_files_per_trigger=1
+    )
+    assert s["batches"] == 4
+    chains = _max_deltas_per_bucket(cfg)
+    assert sorted(chains) == ["assistant", "system", "tool", "user"]
+    assert all(c < 2 for c in chains.values()), chains
+    _assert_folded(spark, cfg, log_dir)
+
+
+def test_streaming_multi_continuous_returns_the_query(spark, tmpdir_path):
+    """With a processing-time trigger the multi-table streaming driver
+    returns the running query, like ``run_sync_streaming``, instead of
+    blocking its caller until the query ends."""
+    import threading
+
+    from estuary_spark.multi import run_sync_streaming_multi
+
+    log_dir = _role_log(spark, tmpdir_path, n_files=2)
+    cfg = _role_cfg(log_dir, tmpdir_path)
+    out: dict = {}
+    th = threading.Thread(
+        target=lambda: out.update(
+            run_sync_streaming_multi(
+                spark, cfg, os.path.join(tmpdir_path, "ckpt"),
+                available_now=False, processing_time="1 second",
+            )
+        )
+    )
+    th.start()
+    try:
+        th.join(timeout=120)
+        assert not th.is_alive(), "run_sync_streaming_multi blocked its caller"
+        q = out["query"]
+        assert q.isActive
+        q.processAllAvailable()
+        _assert_folded(spark, cfg, log_dir)
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        th.join(timeout=60)

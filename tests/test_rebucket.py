@@ -193,12 +193,7 @@ def test_concurrent_rebuckets_one_typed_loser(spark, tmpdir_path):
     )
 
 
-def test_rebucket_after_routing_fails_the_cow_batch(spark, tmpdir_path, monkeypatch):
-    """The interleaving the live race above can hit: a rebucket lands
-    after a copy-on-write batch routed its winners with the old modulus
-    but before the batch pins its merge snapshot. The batch must fail with
-    the typed conflict instead of committing old-modulus rows into the new
-    layout; the checkpointed re-run converges under the new modulus."""
+def _rebucket_after_routing_fails_the_batch(spark, tmpdir_path, monkeypatch, write_mode):
     import pytest
 
     import estuary_spark.apply as A
@@ -208,7 +203,7 @@ def test_rebucket_after_routing_fails_the_cow_batch(spark, tmpdir_path, monkeypa
     root = os.path.join(tmpdir_path, "t")
     write_log(spark, LogSpec(n_convs=30, max_turns=6, seed=85, delete_pct=15), log_dir)
     cfg = SyncConfig(
-        source_log_dir=log_dir, target_table_dir=root, n_buckets=8,
+        source_log_dir=log_dir, target_table_dir=root, n_buckets=8, write_mode=write_mode,
         checkpoint_path=os.path.join(tmpdir_path, "ck.json"),
     )
     run_sync(spark, cfg, events_per_batch=150, max_batches=1)
@@ -234,3 +229,19 @@ def test_rebucket_after_routing_fails_the_cow_batch(spark, tmpdir_path, monkeypa
     assert t.manifest()["n_buckets"] == 32
     assert _state(spark, root) == _fold(spark, read_log(spark, log_dir))
     assert t.read(spark).filter(F.col(BUCKET_COL) != bucket_expr("conv_id", 32)).count() == 0
+
+
+def test_rebucket_after_routing_fails_the_cow_batch(spark, tmpdir_path, monkeypatch):
+    """The interleaving the live race above can hit: a rebucket lands
+    after a copy-on-write batch routed its winners with the old modulus
+    but before the batch pins its merge snapshot. The batch must fail with
+    the typed conflict instead of committing old-modulus rows into the new
+    layout; the checkpointed re-run converges under the new modulus."""
+    _rebucket_after_routing_fails_the_batch(spark, tmpdir_path, monkeypatch, "cow")
+
+
+def test_rebucket_after_routing_fails_the_mor_batch(spark, tmpdir_path, monkeypatch):
+    """The same interleaving in merge-on-read: the delta commit must not
+    rebase onto the rebucketed layout and append rows under old-modulus
+    bucket ids."""
+    _rebucket_after_routing_fails_the_batch(spark, tmpdir_path, monkeypatch, "mor")
