@@ -26,26 +26,9 @@ Scale notes (100 TB / 10^10 events):
 
 from __future__ import annotations
 
-import os
 import time
 import dataclasses
 from dataclasses import dataclass
-
-_PROFILE = os.environ.get("ESTUARY_PROFILE", "") == "1"
-
-
-def _tick(label: str, t0: float, acc: dict | None = None) -> float:
-    """Phase boundary: always accumulates into ``acc`` (the M3 cost
-    profile returned on every BatchResult and recorded in the commit's
-    ``last_batch`` properties — estuary's per-stage cost instrumentation,
-    ``PowerAdapter.scala`` counters analogue); additionally prints when
-    ``ESTUARY_PROFILE=1``."""
-    now = time.time()
-    if acc is not None:
-        acc[label] = round(acc.get(label, 0.0) + (now - t0) * 1000)
-    if _PROFILE:
-        print(f"    [apply {label}] {now - t0:.2f}s", flush=True)
-    return now
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -54,15 +37,28 @@ from estuary_spark.config import (
     PARTITION_TRANSACTION,
     SyncConfig,
 )
-from estuary_spark.operators.lww import lww_reduce
+from estuary_spark.operators.lww import lww_order, lww_reduce
 from estuary_spark.tables import (
     BUCKET_COL,
     DELETED_COL,
     LSN_COL,
-    CommitConflictError,
     LakeTable,
     bucket_expr,
 )
+
+# a routed batch's lineage read is pruned to its touched buckets from this
+# bucket count on (see _apply_mor)
+MOR_PRUNE_BUCKETS = 256
+
+
+def _tick(label: str, t0: float, acc: dict) -> float:
+    """Phase boundary: accumulates into ``acc`` (the M3 cost profile
+    returned on every BatchResult and recorded in the commit's
+    ``last_batch`` properties — estuary's per-stage cost instrumentation,
+    ``PowerAdapter.scala`` counters analogue)."""
+    now = time.time()
+    acc[label] = round(acc.get(label, 0.0) + (now - t0) * 1000)
+    return now
 
 
 def order_for_strategy(changes: DataFrame, cfg: SyncConfig) -> DataFrame:
@@ -74,7 +70,7 @@ def order_for_strategy(changes: DataFrame, cfg: SyncConfig) -> DataFrame:
     correctness).
 
     Spark re-expression: the LWW merge is ORDER-INSENSITIVE (the winner
-    is determined by (lsn, op-rank), not arrival order), so MOD and
+    is determined by ``lww_order``, not arrival order), so MOD and
     PRIMARY_KEY keep the default fully-parallel hash-exchange plan and
     still deliver TRANSACTION-level consistency of the FINAL STATE.
     DATABASE_TABLE and TRANSACTION additionally honor the reference's
@@ -112,8 +108,8 @@ def _apply_mor(
     against the current table state through a COLUMN-PRUNED (key, _lsn,
     _deleted only) read that is additionally BUCKET-PRUNED to the batch's
     touched buckets when the table is bucketed finely enough for pruning to
-    matter (``mor_prune_buckets``, auto at >= 256 buckets: a 10^10-row
-    deployment runs thousands of buckets and a batch touches few, so the
+    matter (``MOR_PRUNE_BUCKETS`` or more: a 10^10-row deployment runs
+    thousands of buckets and a batch touches few, so the
     target scan is O(touched buckets) not O(table); at bench-scale bucket
     counts every batch touches every bucket and the extra touched-distinct
     driver job per batch is pure serial overhead that caps N->4N scaling).
@@ -121,9 +117,10 @@ def _apply_mor(
     aggregate (which materializes the winners cache and also yields the
     batch's observed LSN span, so an unplanned batch pays no separate
     [min, max] job) and the delta write, one task per core.
-    Rejected rows: a strictly-lower-LSN loser is committed but loses every
-    read-time fold deterministically (compaction sweeps it); an EQUAL-LSN
-    loser (nondeterministic fold tie with the base row) is filtered out
+    Rejected rows: a loser ranked strictly below the stored row by
+    ``lww_order`` is committed but loses every read-time fold
+    deterministically (compaction sweeps it); an equal-rank loser
+    (nondeterministic fold tie with the base row) is filtered out
     via a broadcast anti-join paid only when such a tie exists — which
     normal operation never produces (pure replays take the wins==0 path).
     ``n_buckets`` is the modulus the winners were routed with; the delta
@@ -133,9 +130,8 @@ def _apply_mor(
     key_cols = list(cfg.key_cols)
     _pt = time.time()
 
-    prune = cfg.mor_prune_buckets if cfg.mor_prune_buckets is not None else n_buckets >= 256
     touched: list[int] | None = None
-    if prune:
+    if n_buckets >= MOR_PRUNE_BUCKETS:
         # touched buckets (driver result is O(buckets)); this action also
         # materializes the winners persist for the two later consumers
         touched = [int(r[BUCKET_COL]) for r in winners.select(BUCKET_COL).distinct().collect()]
@@ -152,18 +148,16 @@ def _apply_mor(
     ).select(*[c for c in tschema.names])
 
     # ---- lineage (M1) via narrow UNFOLDED target read: the per-key MoR
-    # fold happens inside the first aggregation below (max over an
-    # lsn<<1|deleted encoding — a fixed-width buffer, so the whole chain
-    # stays hash-aggregable), which saves a full narrow-table shuffle per
-    # batch versus folding first and joining second
+    # fold happens inside the first aggregation below (a max over
+    # lww_order — a fixed-width buffer, so the whole chain stays
+    # hash-aggregable), which saves a full narrow-table shuffle per batch
+    # versus folding first and joining second
     t_n = table.read_unfolded(spark, buckets=touched, columns=[]).select(
-        *key_cols,
-        (F.col(LSN_COL) * 2 + F.coalesce(F.col(DELETED_COL), F.lit(False)).cast("long")).alias("_t_ord"),
+        *key_cols, lww_order(F.col(LSN_COL), F.col(DELETED_COL)).alias("_t_ord")
     )
     s_n = winners.select(
         *key_cols,
-        F.col("lsn").alias("_s_lsn"),
-        (F.col("op") == "delete").alias("_s_del"),
+        lww_order(F.col("lsn"), F.col("op") == "delete").alias("_s_ord"),
         F.col("_n_events").alias("_s_n"),
         F.col("_min_lsn").alias("_s_lo"),
         F.col(BUCKET_COL).alias("_s_bucket"),
@@ -173,36 +167,30 @@ def _apply_mor(
         .groupBy(*key_cols)
         .agg(
             F.max("_t_ord").alias("_t_ord"),
-            F.max("_s_lsn").alias("_s_lsn"),
-            F.max(F.col("_s_del").cast("int")).alias("_s_del"),
+            F.max("_s_ord").alias("_s_ord"),
             F.max("_s_n").alias("_s_n"),
             F.min("_s_lo").alias("_s_lo"),
             F.max("_s_bucket").alias("_s_bucket"),
         )
     )
-    t_lsn = F.shiftright(F.col("_t_ord"), 1)
     t_deleted = F.col("_t_ord").bitwiseAND(F.lit(1)) == 1
-    n_src_wins = F.col("_t_ord").isNull() | (F.col("_s_lsn") > t_lsn)
+    s_deleted = F.col("_s_ord").bitwiseAND(F.lit(1)) == 1
+    n_src_wins = F.col("_t_ord").isNull() | (F.col("_s_ord") > F.col("_t_ord"))
+    n_tie = F.col("_s_ord") == F.col("_t_ord")
     agg_rows = (
         per_key.groupBy(F.col("_s_bucket").alias("b"))
         .agg(
-            F.sum(F.when(n_src_wins & (F.col("_s_del") == 0), 1).otherwise(0)).alias("ups"),
+            F.sum(F.when(n_src_wins & ~s_deleted, 1).otherwise(0)).alias("ups"),
             F.sum(
-                F.when(
-                    n_src_wins
-                    & (F.col("_s_del") == 1)
-                    & F.col("_t_ord").isNotNull()
-                    & ~t_deleted,
-                    1,
-                ).otherwise(0)
+                F.when(n_src_wins & s_deleted & F.col("_t_ord").isNotNull() & ~t_deleted, 1).otherwise(0)
             ).alias("dels"),
             F.sum(F.when(F.col("_t_ord").isNotNull() & ~n_src_wins, 1).otherwise(0)).alias("late"),
             F.sum(F.col("_s_n") - 1).alias("ooo"),
             F.sum(F.when(n_src_wins, 1).otherwise(0)).alias("wins"),
             F.count(F.lit(1)).alias("nk"),
-            F.sum(F.when(F.col("_s_lsn") == t_lsn, 1).otherwise(0)).alias("ties"),
+            F.sum(F.when(n_tie, 1).otherwise(0)).alias("ties"),
             F.min("_s_lo").alias("lo"),
-            F.max("_s_lsn").alias("hi"),
+            F.max(F.shiftright(F.col("_s_ord"), 1)).alias("hi"),
         )
         .collect()
     )
@@ -229,13 +217,13 @@ def _apply_mor(
         return _commit_no_wins(table, batch_id, offset_range, rng, lineage_rows, t0)
 
     # Rejected-row hygiene. A key that lost the LSN guard splits two ways:
-    #   * _s_lsn < t_lsn (the normal late tail): its delta row loses every
-    #     read-time fold DETERMINISTICALLY (strictly lower _lsn), so it is
+    #   * _s_ord < _t_ord (the normal late tail): its delta row loses every
+    #     read-time fold DETERMINISTICALLY (strictly lower rank), so it is
     #     harmless junk that compaction sweeps — no per-batch filter cost;
-    #   * _s_lsn == t_lsn (an EQUAL-LSN conflict — replayed range with a
-    #     different payload, or a malformed feed): its tie with the base
-    #     row in the fold would be nondeterministic, so those keys MUST be
-    #     filtered out of the delta. Ties are absent in normal operation
+    #   * _s_ord == _t_ord (an equal-LSN conflict of two live rows —
+    #     replayed range with a different payload, or a malformed feed):
+    #     its tie with the base row in the fold would be nondeterministic,
+    #     so those keys MUST be filtered out of the delta. Ties are absent in normal operation
     #     (a pure replay takes the wins==0 path above), so the broadcast
     #     anti-join below is effectively never paid in the hot path.
     # When losers DOMINATE the batch (sustained backfill overlap, repeated
@@ -251,7 +239,7 @@ def _apply_mor(
         win_keys = per_key.filter(n_src_wins).select(*key_cols)
         delta = delta.join(win_keys, on=key_cols, how="left_semi")
     elif n_ties > 0:
-        tie_keys = per_key.filter(F.col("_s_lsn") == t_lsn).select(*key_cols)
+        tie_keys = per_key.filter(n_tie).select(*key_cols)
         delta = delta.join(F.broadcast(tie_keys), on=key_cols, how="left_anti")
 
     version = table.commit_delta(
@@ -294,8 +282,7 @@ class BatchResult:
     offset_range: tuple[int, int] | None
     lineage: list[dict]
     wall_ms: int
-    # M3 cost profile: per-phase milliseconds for this batch (always on;
-    # ESTUARY_PROFILE=1 additionally prints them live)
+    # M3 cost profile: per-phase milliseconds for this batch
     phases_ms: dict = dataclasses.field(default_factory=dict)
 
 
@@ -410,21 +397,19 @@ def apply_batch(
     cfg: SyncConfig,
     batch_id: int,
     offset_range: tuple[int, int] | None = None,
-    check_applied_range: bool = True,
 ) -> BatchResult:
     """Apply one micro-batch of change events to the target table.
 
-    ``check_applied_range=True`` is valid ONLY when batches arrive as
-    contiguous, non-overlapping LSN ranges (the batch runner's plan): a
-    replayed range then nests inside an applied range and is skipped
-    driver-side. An unordered source (Structured Streaming file batches —
-    listing order is modification-time, not LSN) must pass ``False``:
-    a later batch's [min, max] can nest inside the UNION of earlier ranges
-    without its events having been applied, so the range fast-path would
-    drop data. Exactly-once there rests on merge idempotence instead —
-    every batch where no source row beats the target (``wins == 0``) is
-    detected after the LSN-guard join and commits nothing, so a replay
-    still produces zero new snapshots.
+    A planned ``offset_range`` (contiguous, non-overlapping LSN ranges —
+    the batch runner's plan) that nests inside an applied range is a
+    replay and is skipped driver-side. An unordered source (Structured
+    Streaming file batches, listed by modification time, not LSN) must
+    pass no range: a later batch's [min, max] can nest inside the UNION
+    of earlier ranges without its events having been applied. Exactly-
+    once there rests on merge idempotence instead — every batch where no
+    source row beats the target (``wins == 0``) is detected after the
+    LSN-guard join and commits nothing, so a replay still produces zero
+    new snapshots.
 
     ``offset_range=None`` (the streaming runners: no planned range) makes
     the batch's OBSERVED [min, max] DML LSN span stand in for it — read
@@ -443,7 +428,7 @@ def apply_batch(
     _pt = _tick("offset-range", t0, phases)
 
     # ---- exactly-once fast path: skip a fully-applied (replayed) range
-    if offset_range is not None and check_applied_range and table.is_range_applied(*offset_range):
+    if offset_range is not None and table.is_range_applied(*offset_range):
         return BatchResult(batch_id, True, None, offset_range, [], int((time.time() - t0) * 1000))
 
     # ---- event-type filter (F1) — only DML row events flow
@@ -562,18 +547,9 @@ def apply_batch(
     # the merge is computed from and pass it as the commit's conflict-
     # validation base: a concurrent writer (maintenance job, rival sync)
     # landing between this read and the commit must surface as
-    # CommitConflictError, not silently lose its files. A rebucket that
-    # landed before the pin changed the modulus the winners were routed
-    # with: the pinned snapshot's buckets are not theirs, and validation
-    # against it could not see that — a conflict too.
-    base = table._raw_manifest()
-    base_v = base["version"]
-    if int(base["n_buckets"]) != n_buckets:
-        winners.unpersist()
-        raise CommitConflictError(
-            f"{table.root!r} was rebucketed from {n_buckets} to {base['n_buckets']} "
-            "buckets during the batch; recompute it from the latest snapshot"
-        )
+    # CommitConflictError, not silently lose its files. The commit also
+    # fails if a rebucket changed the modulus the winners were routed with.
+    base_v = table._raw_manifest()["version"]
     target = table.read(spark, buckets=touched, include_tombstones=True, version=base_v)
 
     s = winners.select(
@@ -594,10 +570,11 @@ def apply_batch(
 
     j = t.join(s, on=key_cols, how="full_outer")
 
-    src_wins = F.col("_s_lsn").isNotNull() & (
-        F.col("_t_lsn").isNull() | (F.col("_s_lsn") > F.col("_t_lsn"))
-    )
     is_delete = F.col("_s_op") == "delete"
+    src_wins = F.col("_s_lsn").isNotNull() & (
+        F.col("_t_lsn").isNull()
+        | (lww_order(F.col("_s_lsn"), is_delete) > lww_order(F.col("_t_lsn"), F.col("_t_deleted")))
+    )
 
     # ---- single fused join pass: the merged row AND the per-row lineage
     # flags come out of ONE target⨝changes shuffle join (persisted), so the
@@ -673,18 +650,22 @@ def apply_batch(
     # keep only physical table columns, in schema order (flags dropped)
     final = merged.select(*[c for c in tschema.names])
 
-    version = table.commit(
-        spark,
-        final,
-        replaced_buckets=touched,
-        applied_range=offset_range,
-        batch_id=batch_id,
-        new_schema=tschema,
-        extra_properties=_last_batch(batch_id, rng, lineage_rows, phases),
-        base_version=base_v,
-        lsn_range=rng,
-    )
+    try:
+        version = table.commit(
+            spark,
+            final,
+            replaced_buckets=touched,
+            applied_range=offset_range,
+            batch_id=batch_id,
+            new_schema=tschema,
+            extra_properties=_last_batch(batch_id, rng, lineage_rows, phases),
+            base_version=base_v,
+            lsn_range=rng,
+            n_buckets=n_buckets,
+        )
+    finally:
+        # a conflict (rival commit, rebucket) must not leak the caches
+        merged.unpersist()
+        winners.unpersist()
     _pt = _tick("commit", _pt, phases)
-    merged.unpersist()
-    winners.unpersist()
     return _committed(batch_id, version, rng, lineage_rows, t0, phases)

@@ -106,13 +106,6 @@ class SyncConfig:
     # mor: auto-compact when any bucket accumulates this many delta files
     # (0 disables auto-compaction inside run_sync)
     compact_every: int = 16
-    # mor: prune the per-batch lineage target read to the batch's touched
-    # buckets. None = auto (prune when n_buckets >= 256): at 10^10 scale
-    # (thousands of buckets, batch touches few) pruning bounds the target
-    # scan by batch key spread; at small bucket counts every batch touches
-    # every bucket and the touched-distinct driver job is pure serial
-    # overhead per batch
-    mor_prune_buckets: bool | None = None
 
     partition_strategy: str = PARTITION_PRIMARY_KEY
 

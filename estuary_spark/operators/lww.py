@@ -1,4 +1,13 @@
-"""Last-writer-wins dedupe/sequencing per key — the core CDC operator.
+"""Last-writer-wins dedupe/sequencing per key — the core CDC operator,
+and the ONE place that knows which row wins for a key.
+
+The winner rule (``lww_order``): the higher LSN wins; at equal LSN a
+delete beats a non-delete. By the data model, equal-LSN non-deletes are
+verbatim duplicates (replay injection), so any choice among them is the
+same row. Every per-key fold in the engine — the batch reduce, the
+read-time MoR fold, the change feed, the MoR lineage guard and the COW
+merge guard — orders by this rule, so the applied table is the same
+however the log is cut into batches.
 
 The reference preserves per-key order structurally: a two-level
 consistent-hash route pins every primary key to one batcher -> one sinker
@@ -6,12 +15,13 @@ actor, so events for one key apply in binlog order and the final value is
 the last one (``mysql/lifecycle/reborn/batch/imp/MysqlBinlogInOrderBatcherMysqlManager.scala:33-42``,
 ``mysql/lifecycle/package.scala:96-134`` in /root/reference). In Spark the
 hash shuffle IS the router, and order is restored *declaratively*:
-``max_by(struct(values), lsn)`` per key — no mailbox, no pinning.
+``fold_latest`` = ``max_by(struct(values), lww_order)`` per key — no
+mailbox, no pinning.
 
 Skew (north-rule axis): a hot conversation can put 10-30% of a batch's
-events on one key. ``salted_lww_reduce`` splits each key into
-``salt_factor`` sub-groups for a local pre-reduce, then reduces the (at
-most ``salt_factor``) survivors per key — the classic two-phase/salted
+events on one key. ``lww_reduce(salt_factor=N)`` splits each key into
+``N`` sub-groups for a local pre-reduce, then reduces the (at most
+``N``) survivors per key — the classic two-phase/salted
 aggregation. Catalyst's partial hash aggregation already performs a
 map-side combine for ``max_by``; the explicit salt stage additionally
 bounds the reduce-side per-key fan-in when a single key overflows one
@@ -20,7 +30,34 @@ task's hash table, and is what the north rule asks to be explicit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def lww_order(lsn: Column, is_delete: Column) -> Column:
+    """The winner rule as one orderable long: the higher LSN wins, and at
+    equal LSN a delete (a NULL flag counts as not deleted) beats a
+    non-delete. Encoded as ``lsn*2 + is_delete`` — a fixed-width value, so
+    order-only folds stay a hash-aggregable ``max`` — which needs LSNs
+    below 2^62."""
+    return lsn.cast("long") * 2 + F.coalesce(is_delete, F.lit(False)).cast("long")
+
+
+def fold_latest(
+    df: DataFrame,
+    keys: list[str],
+    order: Column | str,
+    payload: list[str] | None = None,
+    **aggs: Column,
+) -> DataFrame:
+    """One row per key: the ``payload`` columns (default: every non-key
+    column) of the row with the highest ``order`` — normally an
+    ``lww_order`` — plus one column per named aggregate in ``aggs``."""
+    if payload is None:
+        payload = [c for c in df.columns if c not in keys]
+    return df.groupBy(*keys).agg(
+        F.max_by(F.struct(*payload), order).alias("_w"),
+        *[agg.alias(name) for name, agg in aggs.items()],
+    ).select(*keys, "_w.*", *aggs)
 
 
 def choose_salt_factor(
@@ -90,59 +127,32 @@ def lww_reduce(
 ) -> DataFrame:
     """Reduce a change-event DataFrame to one winning event per key.
 
-    Returns one row per key with the highest-LSN event's columns, the
-    key's event count ``_n_events`` and its LOWEST event LSN ``_min_lsn``
-    (with the winner's LSN, a batch's observed [min, max] span falls out of
-    any later aggregate over the winners — no separate pass over the
-    events). Ties on LSN (duplicate-event injection / replay) are broken by
-    op priority (delete > update > insert) then deterministically —
-    duplicates are verbatim copies so any choice is identical.
+    Returns one row per key with the winning event's columns (by
+    ``lww_order``), the key's event count ``_n_events`` and its LOWEST
+    event LSN ``_min_lsn`` (with the winner's LSN, a batch's observed
+    [min, max] span falls out of any later aggregate over the winners —
+    no separate pass over the events).
 
-    ``salt_factor > 1`` enables the explicit two-phase salted reduce.
+    ``salt_factor > 1`` enables the explicit two-phase salted reduce. Both
+    phases order by the same carried ``_ord``, so an equal-LSN
+    delete+insert pair split across salt sub-groups resolves exactly as
+    in the unsalted reduce.
     """
     payload = [c for c in df.columns if c not in key_cols]
-    # deterministic tie-break: struct comparison is lexicographic, so put
-    # (lsn, op_rank) first — equal-LSN duplicates are byte-identical rows
-    op_rank = (
-        F.when(F.col(op_col) == "delete", 2)
-        .when(F.col(op_col) == "update", 1)
-        .otherwise(0)
-        if op_col in df.columns
-        else F.lit(0)
-    )
-    ordering = F.struct(F.col(lsn_col).alias("_l"), op_rank.alias("_r"))
+    is_delete = F.col(op_col) == "delete" if op_col in df.columns else F.lit(False)
+    df = df.withColumn("_ord", lww_order(F.col(lsn_col), is_delete))
 
     if salt_factor and salt_factor > 1:
         salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_factor)))
-        partial = salted.groupBy(*key_cols, "_salt").agg(
-            F.max_by(F.struct(*payload), ordering).alias("_w"),
-            F.count(F.lit(1)).alias("_n"),
-            F.min(lsn_col).alias("_lo"),
+        partial = fold_latest(
+            salted, [*key_cols, "_salt"], "_ord", [*payload, "_ord"],
+            _n=F.count(F.lit(1)), _lo=F.min(lsn_col),
         )
-        # Phase-two ordering must carry the SAME op-rank tie-break as phase
-        # one, recomputed from the phase-one winner's op column: an
-        # equal-LSN delete+insert pair whose rows land in different salt
-        # sub-groups meets again here, and ordering by LSN alone would make
-        # the salted fold diverge from the unsalted one (VERDICT r4).
-        w_rank = (
-            F.when(F.col(f"_w.{op_col}") == "delete", 2)
-            .when(F.col(f"_w.{op_col}") == "update", 1)
-            .otherwise(0)
-            if op_col in df.columns
-            else F.lit(0)
+        return fold_latest(
+            partial, key_cols, "_ord", payload,
+            _n_events=F.sum("_n"), _min_lsn=F.min("_lo"),
         )
-        final = partial.groupBy(*key_cols).agg(
-            F.max_by(
-                F.col("_w"),
-                F.struct(F.col(f"_w.{lsn_col}").alias("_l"), w_rank.alias("_r")),
-            ).alias("_w"),
-            F.sum("_n").alias("_n_events"),
-            F.min("_lo").alias("_min_lsn"),
-        )
-    else:
-        final = df.groupBy(*key_cols).agg(
-            F.max_by(F.struct(*payload), ordering).alias("_w"),
-            F.count(F.lit(1)).alias("_n_events"),
-            F.min(lsn_col).alias("_min_lsn"),
-        )
-    return final.select(*key_cols, "_w.*", "_n_events", "_min_lsn")
+    return fold_latest(
+        df, key_cols, "_ord", payload,
+        _n_events=F.count(F.lit(1)), _min_lsn=F.min(lsn_col),
+    )

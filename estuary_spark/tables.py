@@ -40,6 +40,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from estuary_spark.fileio import FileIO, LocalFileIO
+from estuary_spark.operators.lww import fold_latest, lww_order
 
 MANIFEST_DIR = "_manifests"
 SHARD_SUBDIR = "shards"
@@ -552,10 +553,12 @@ class LakeTable:
         LSN guard).
 
         Merge-on-read: buckets with delta files are folded at read time —
-        per key the highest-``_lsn`` row across base+delta files wins
-        (Iceberg MoR / position-delete analogue, expressed as a hash
-        aggregation instead of an anti-join). Buckets without deltas skip
-        the fold entirely, so a freshly-compacted table reads shuffle-free.
+        per key one row across base+delta files wins by the engine's one
+        winner rule (``operators.lww.lww_order``: highest ``_lsn``, and at
+        equal ``_lsn`` a tombstone beats a live row), the Iceberg MoR /
+        position-delete analogue expressed as a hash aggregation instead
+        of an anti-join. Buckets without deltas skip the fold entirely, so
+        a freshly-compacted table reads shuffle-free.
 
         ``columns`` prunes the parquet scan server-side (key/system columns
         are always kept so the fold and tombstone logic stay correct).
@@ -595,13 +598,8 @@ class LakeTable:
             base = _scan(self._files_for(m, "files", dirty_list))
             delta = _scan(self._files_for(m, "delta_files", dirty_list))
             both = base.unionByName(delta)
-            payload = [c for c in both.columns if c not in key_cols]
-            folded = (
-                both.groupBy(*key_cols)
-                .agg(F.max_by(F.struct(*payload), F.col(LSN_COL)).alias("_w"))
-                .select(*key_cols, "_w.*")
-            )
-            df = df.unionByName(folded)
+            order = lww_order(F.col(LSN_COL), F.col(DELETED_COL))
+            df = df.unionByName(fold_latest(both, key_cols, order))
 
         df = _apply_column_semantics(df, m)
         if not include_tombstones and DELETED_COL in df.columns:
@@ -632,10 +630,12 @@ class LakeTable:
         table itself serves the feed).
 
         Correctness: the winner among a key's rows with ``_lsn <= end``
-        is the key's true state as of ``end``; restricting the scan to
-        ``_lsn >= start`` cannot change that winner for any EMITTED key
+        (by ``operators.lww.lww_order``: highest ``_lsn``, and at equal
+        ``_lsn`` a tombstone beats a live row — the rule every write path
+        applies) is the key's true state as of ``end``; restricting the
+        scan to ``_lsn >= start`` cannot change that winner for any EMITTED key
         (the winner's LSN is >= start by definition of being emitted, and
-        older superseded rows never win a max-by fold), so both bounds
+        older superseded rows never win the fold), so both bounds
         push down to the parquet scan as data filters. Keys untouched in
         the window are never scanned, let alone emitted.
 
@@ -704,12 +704,7 @@ class LakeTable:
             df = df.filter(F.col(LSN_COL) <= F.lit(int(end_lsn)))
         df = _apply_column_semantics(df, m)
 
-        payload = [c for c in df.columns if c not in key_cols]
-        folded = (
-            df.groupBy(*key_cols)
-            .agg(F.max_by(F.struct(*payload), F.col(LSN_COL)).alias("_w"))
-            .select(*key_cols, "_w.*")
-        )
+        folded = fold_latest(df, key_cols, lww_order(F.col(LSN_COL), F.col(DELETED_COL)))
         return folded.select(
             *[c for c in folded.columns if c not in (LSN_COL, DELETED_COL, BUCKET_COL)],
             F.col(LSN_COL).alias(change_lsn_col),
@@ -732,6 +727,7 @@ class LakeTable:
         new_n_buckets: int | None = None,
         base_version: int | None = None,
         lsn_range: tuple[int, int] | None = None,
+        n_buckets: int | None = None,
     ) -> int:
         """Copy-on-write commit: write ``df`` (which must contain all rows
         for ``replaced_buckets`` and only those buckets), then publish a
@@ -770,8 +766,12 @@ class LakeTable:
         written). If it DID touch them, the rewrite was computed from
         stale data and :class:`CommitConflictError` is raised — the
         caller must recompute (compaction callers skip and retry later).
+        ``n_buckets`` is the modulus ``df``'s bucket ids were routed with,
+        checked against the loaded snapshot and every rebase exactly as in
+        ``commit_delta``.
         """
         m0 = self.manifest()
+        _check_n_buckets(self.root, m0, n_buckets)
         schema_req = new_schema if new_schema is not None else T.StructType.fromJson(m0["schema"])
         # the snapshot the rewrite's input state was read from — conflict
         # validation baseline (a rival commit after it is already in m0)
@@ -800,6 +800,7 @@ class LakeTable:
             extra_properties,
             new_n_buckets,
             lsn_range,
+            n_buckets,
         )
 
     def _write_buckets(
@@ -841,6 +842,7 @@ class LakeTable:
         extra_properties: dict | None,
         new_n_buckets: int | None,
         lsn_range=None,
+        n_buckets: int | None = None,
     ) -> int:
         """The metadata phase of a copy-on-write commit (everything after
         the data files exist): conflict validation, inventory update,
@@ -850,6 +852,7 @@ class LakeTable:
         a real commit runs."""
 
         def build(m: dict) -> dict:
+            _check_n_buckets(self.root, m, n_buckets)
             if m["version"] != base["version"]:
                 # conflict validation: the rewrite folded the replaced
                 # buckets' state AS OF ``base`` — any concurrent change to

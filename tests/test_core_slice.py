@@ -142,7 +142,7 @@ def test_observed_span_from_reduce(spark, tmpdir_path):
                 cfg.target_table_dir, user_schema_of_log(batch, cfg), n_buckets=8,
                 key_cols=list(cfg.key_cols),
             )
-            res = apply_batch(spark, t, batch, cfg, 0, offset_range=None, check_applied_range=False)
+            res = apply_batch(spark, t, batch, cfg, 0, offset_range=None)
             assert not res.skipped and res.offset_range == (3, 95), (mode, salt, res)
             assert {(r["offset_start"], r["offset_end"]) for r in res.lineage} == {(3, 95)}
             assert t.applied_ranges() == []

@@ -111,11 +111,10 @@ def test_mor_all_late_batch_keeps_lineage_and_records_range(spark, tmpdir_path):
     cfg = SyncConfig(
         source_log_dir=os.path.join(tmpdir_path, "log"),
         target_table_dir=os.path.join(tmpdir_path, "t"),
-        n_buckets=2,
+        n_buckets=256,  # exercise the touched-bucket pruned path
         write_mode="mor",
         compact_every=0,
         envelope_cols=("lsn", "op"),
-        mor_prune_buckets=True,  # exercise the touched-bucket pruned path
     )
     b1 = spark.createDataFrame(
         [(10, "insert", "c1", 0, "A"), (11, "insert", "c2", 0, "B")],
@@ -167,10 +166,10 @@ def test_mor_rejected_rows_never_enter_delta(spark, tmpdir_path):
     table = open_or_create_table(spark, cfg, b1)
     apply_batch(spark, table, b1, cfg, 0, offset_range=(10, 11))
 
-    # mixed batch (unordered source → range check off): c1 loses the guard
+    # mixed batch (its range is not inside an applied one): c1 loses the guard
     # at equal LSN, c2 wins
     b2 = spark.createDataFrame([(10, "update", "c1", 0, "REJECT"), (20, "update", "c2", 0, "C")], cols)
-    r = apply_batch(spark, table, b2, cfg, 1, offset_range=(10, 20), check_applied_range=False)
+    r = apply_batch(spark, table, b2, cfg, 1, offset_range=(10, 20))
     assert not r.skipped
 
     unfolded = table.read_unfolded(spark).collect()
@@ -215,7 +214,7 @@ def test_mor_late_heavy_batch_delta_bounded_by_winners(spark, tmpdir_path):
     late = [(10 + i, "update", f"c{i}", 0, "LATE") for i in range(90)]
     wins = [(2000 + i, "update", f"c{i}", 0, f"new{i}") for i in range(90, 100)]
     b2 = spark.createDataFrame(late + wins, cols)
-    r = apply_batch(spark, table, b2, cfg, 1, offset_range=(10, 2099), check_applied_range=False)
+    r = apply_batch(spark, table, b2, cfg, 1, offset_range=(10, 2099))
     assert not r.skipped
     assert sum(x["late_events"] for x in r.lineage) == 90
 

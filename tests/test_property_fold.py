@@ -5,6 +5,7 @@ last-by-LSN fold. Seeded random (deterministic across runs)."""
 import os
 import random
 
+import pytest
 from pyspark.sql import types as T
 
 from estuary_spark.config import SyncConfig
@@ -56,7 +57,10 @@ def _random_events(rng, n_keys, n_events):
     return events
 
 
-def test_random_interleavings_match_python_fold(spark, tmpdir_path):
+@pytest.mark.parametrize(
+    "mode", [{"write_mode": "cow"}, {"write_mode": "mor", "compact_every": 2}], ids=["cow", "mor"]
+)
+def test_random_interleavings_match_python_fold(spark, tmpdir_path, mode):
     for trial in range(3):
         rng = random.Random(1000 + trial)
         events = _random_events(rng, n_keys=15, n_events=300)
@@ -68,6 +72,7 @@ def test_random_interleavings_match_python_fold(spark, tmpdir_path):
             target_table_dir=os.path.join(tmpdir_path, f"table{trial}"),
             n_buckets=4,
             envelope_cols=("lsn", "op"),
+            **mode,
         )
         run_sync(spark, cfg, events_per_batch=70)
 
@@ -76,6 +81,47 @@ def test_random_interleavings_match_python_fold(spark, tmpdir_path):
             for r in read_final_state(spark, cfg).collect()
         }
         assert got == python_fold(events), f"trial {trial} diverged"
+
+
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_equal_lsn_delete_wins_at_any_batch_cut(spark, tmpdir_path, write_mode):
+    """An insert and a delete of one key at the SAME LSN leave the key
+    deleted however the two events are cut into batches: together, insert
+    then delete, or delete then insert (and, in MoR, after compaction)."""
+    from estuary_spark.apply import apply_batch
+    from estuary_spark.maintenance import compact
+    from estuary_spark.runner import user_schema_of_log
+    from estuary_spark.tables import LakeTable
+
+    ins = {"lsn": 5, "op": "insert", "conv_id": "c1", "turn_idx": 0, "text": "alive"}
+    dele = {"lsn": 5, "op": "delete", "conv_id": "c1", "turn_idx": 0, "text": None}
+    cuts = {
+        "together": [[ins, dele]],
+        "insert-then-delete": [[ins], [dele]],
+        "delete-then-insert": [[dele], [ins]],
+    }
+    for name, batches in cuts.items():
+        cfg = SyncConfig(
+            source_log_dir="unused",
+            target_table_dir=os.path.join(tmpdir_path, name),
+            n_buckets=2,
+            envelope_cols=("lsn", "op"),
+            write_mode=write_mode,
+            compact_every=0,
+        )
+        frames = [spark.createDataFrame(b, SCHEMA) for b in batches]
+        t = LakeTable.create(
+            cfg.target_table_dir, user_schema_of_log(frames[0], cfg), n_buckets=2,
+            key_cols=list(cfg.key_cols),
+        )
+        for i, df in enumerate(frames):
+            apply_batch(spark, t, df, cfg, i)
+        assert t.read(spark).count() == 0, name
+        (row,) = t.read(spark, include_tombstones=True).collect()
+        assert row["_deleted"] and row["_lsn"] == 5, name
+        if write_mode == "mor":
+            compact(spark, t, max_files_per_bucket=10**9, max_delta_files_per_bucket=0)
+            assert t.read(spark).count() == 0, name
 
 
 def python_changes(events, cut):

@@ -34,7 +34,9 @@ def test_salted_lww_hot_key_correct(spark):
 
 
 def test_lww_tie_break_op_priority(spark):
-    """Equal LSN: delete outranks update outranks insert (deterministic)."""
+    """Equal LSN: a delete beats every non-delete (``lww_order``); equal-LSN
+    non-deletes are verbatim duplicates by the data model, so which one
+    of them wins does not matter."""
     df = spark.createDataFrame(
         [
             ("k", 0, 5, "insert", "a"),
